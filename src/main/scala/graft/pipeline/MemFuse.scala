@@ -226,9 +226,7 @@ class MemFuse(
     }
     if (hasKw || hasIvf || hasPq || hasIvfPq) {
       m1New.unpersist()
-      indexHandles.synchronized {
-        ivfHandle = None; kwHandle = None; pqHandle = None; ivfPqHandle = None
-      }
+      dropIndexHandles()
     }
   }
 
@@ -271,12 +269,27 @@ class MemFuse(
 
   @transient private lazy val viewCache =
     scala.collection.concurrent.TrieMap.empty[String, DataFrame]
+  /** A view is built outside any lock and stored only if no
+    * [[clearCache]] ran since its build began — the same generation
+    * rule as [[queryCached]]: a view resolved from a pre-write manifest
+    * is returned to its caller but never cached past the write. */
   private def cachedView(key: String)(build: => DataFrame): DataFrame =
-    viewCache.getOrElseUpdate(key, build)
+    viewCache.getOrElse(key, {
+      val gen = resultCache.synchronized(cacheGen)
+      val view = build
+      resultCache.synchronized {
+        if (cacheGen == gen) viewCache.getOrElseUpdate(key, view) else view
+      }
+    })
 
-  /** Drop cached table views (picks up writes made outside this facade,
-    * e.g. a streaming ingest running against the same warehouse). */
-  def refresh(): Unit = clearCache()
+  /** Drop cached table views, cached results and open index handles:
+    * picks up writes made outside this facade, e.g. a streaming ingest
+    * or another facade on the same warehouse. Without it a held keyword
+    * handle can pin a stats version those writes have since vacuumed. */
+  def refresh(): Unit = {
+    clearCache()
+    dropIndexHandles()
+  }
 
   /** F4 item-type filter over the metadata map (reference filters
     * messages/knowledge/chunks by metadata.type, numpy_store.py:532-546)
@@ -540,16 +553,18 @@ class MemFuse(
         s"vectorIndex must be ivf|pq|ivfpq, got $other")
     }
     resetTombstones() // a full rebuild carries no deleted docs
-    // drop stale open handles; the next indexed query reopens
-    indexHandles.synchronized {
-      ivfHandle = None; kwHandle = None; pqHandle = None; ivfPqHandle = None
-    }
+    dropIndexHandles()
   }
 
   // open index handles, held like the reference holds its FTS/DiskANN
   // connections: centroids collected once, file listings resolved once —
-  // NOT once per query. Invalidated by buildIndexes.
+  // NOT once per query. Invalidated by every index write of this facade
+  // and by [[refresh]].
   @transient private object indexHandles
+  /** Drop the open handles; the next indexed query reopens. */
+  private def dropIndexHandles(): Unit = indexHandles.synchronized {
+    ivfHandle = None; kwHandle = None; pqHandle = None; ivfPqHandle = None
+  }
   @transient private var ivfHandle: Option[IvfIndex] = None
   @transient private var kwHandle: Option[KeywordIndex] = None
   @transient private var pqHandle: Option[PqIndex] = None
@@ -736,9 +751,7 @@ class MemFuse(
       }
     }
     resetTombstones()
-    indexHandles.synchronized {
-      ivfHandle = None; kwHandle = None; pqHandle = None; ivfPqHandle = None
-    }
+    dropIndexHandles()
   }
 
   /** J5 session fan-out, collapsed to one job: where the reference loops
@@ -1134,30 +1147,45 @@ class MemFuse(
   // buffer/query_buffer.py:102-215: cache check → buffer-first routing →
   // quality gate ≥0.7 → storage supplement) ----------
 
+  // keyed on the (text, user, topK) tuple: a joined string would let a
+  // `|` in a user id alias another tenant's key
+  private type CacheKey = (String, String, Int)
   private val resultCache =
-    new java.util.LinkedHashMap[String, Array[org.apache.spark.sql.Row]](16, 0.75f, true) {
+    new java.util.LinkedHashMap[CacheKey, Array[org.apache.spark.sql.Row]](16, 0.75f, true) {
       override def removeEldestEntry(
-          e: java.util.Map.Entry[String, Array[org.apache.spark.sql.Row]]): Boolean =
+          e: java.util.Map.Entry[CacheKey, Array[org.apache.spark.sql.Row]]): Boolean =
         size() > 100 // reference cache_size=100
     }
+  // bumped by every clearCache(); guarded by the resultCache monitor
+  private var cacheGen = 0L
 
-  /** Cached hybrid query: driver-side LRU keyed by
-    * (query|user|topK) — the Spark analogue of QueryBuffer's result
-    * cache. Returns collected rows (the API-response shape). */
-  def queryCached(text: String, userId: String, topK: Int = 5): Array[org.apache.spark.sql.Row] =
-    resultCache.synchronized {
-      val key = s"$text|$userId|$topK"
-      val hit = resultCache.get(key)
-      if (hit != null) hit
-      else {
-        val rows = query(text, userId, topK).collect()
-        resultCache.put(key, rows)
-        rows
+  /** Cached hybrid query: driver-side LRU keyed by (text, user, topK) —
+    * the Spark analogue of QueryBuffer's result cache. Returns collected
+    * rows (the API-response shape).
+    *
+    * The `resultCache` monitor covers only the lookup and the insert;
+    * the query itself runs outside it, so misses for different keys run
+    * concurrently and a hit never waits behind a miss. A miss records
+    * the cache generation at lookup and inserts its rows only if no
+    * [[clearCache]] ran meanwhile — rows computed before a write are
+    * returned to their caller (a consistent snapshot) but never served
+    * from the cache after that write. Concurrent misses on one key each
+    * compute; the last insert wins. */
+  def queryCached(text: String, userId: String, topK: Int = 5): Array[org.apache.spark.sql.Row] = {
+    val key = (text, userId, topK)
+    val (hit, gen) = resultCache.synchronized((Option(resultCache.get(key)), cacheGen))
+    hit.getOrElse {
+      val rows = query(text, userId, topK).collect()
+      resultCache.synchronized {
+        if (cacheGen == gen) resultCache.put(key, rows)
       }
+      rows
     }
+  }
 
-  def clearCache(): Unit = {
-    resultCache.synchronized(resultCache.clear())
+  def clearCache(): Unit = resultCache.synchronized {
+    cacheGen += 1
+    resultCache.clear()
     viewCache.clear()
   }
 

@@ -573,6 +573,31 @@ class IndexSpec extends SparkSpec {
     assert(new KeywordIndex(spark, kdir).bm25(terms, 5).count() == 5)
   }
 
+  test("refresh() reopens index handles another facade's writes outdated") {
+    val dir = graft.TempDirs.create("idxrefresh").toString
+    val a = new MemFuse(spark, dir)
+    a.ingest(Seq(
+      Schemas.Message("m1", "s1", "u1", "r1", 1, "user", "spark shuffle partition tuning", ts(1)),
+      Schemas.Message("m2", "s1", "u1", "r2", 2, "user", "broadcast join details", ts(2))).toDF())
+    a.buildIndexes(nlist = 2)
+    // an incremental add commits the stats_upd version A's handle pins
+    a.ingest(Seq(Schemas.Message("m3", "s2", "u1", "r3", 3, "user",
+      "spark partition pruning", ts(3))).toDF())
+    def indexed(mf: MemFuse, text: String) =
+      mf.query(text, "u1", topK = 3, useIndexes = true, nProbe = 2)
+        .select("id").as[String].collect().toSet
+    assert(indexed(a, "spark partition").nonEmpty)
+    // three batches from B vacuum that version (stats_upd keeps two)
+    val b = new MemFuse(spark, dir)
+    (4 to 6).foreach(i => b.ingest(Seq(Schemas.Message(s"m$i", "s3", "u1", s"r$i", i,
+      "user", s"zeta omega note $i", ts(i))).toDF()))
+    a.refresh()
+    val fromB = b.m1.filter(col("session_id") === "s3")
+      .select("chunk_id").as[String].collect().toSet
+    assert(fromB.size == 3)
+    assert(indexed(a, "zeta omega").exists(fromB))
+  }
+
   test("three-way hybrid: includeGraph adds the m2 vertex leg to the fusion") {
     val dir = graft.TempDirs.create("graphleg").toString
     val engine = new MemFuse(spark, dir)

@@ -3,6 +3,10 @@ package graft
 import graft.pipeline._
 import org.apache.spark.sql.functions._
 import java.nio.file.Files
+import java.util.concurrent.TimeUnit
+import scala.concurrent.{Await, Future}
+import scala.concurrent.ExecutionContext.Implicits.global
+import scala.concurrent.duration._
 
 class PipelineSpec extends SparkSpec {
   import spark.implicits._
@@ -183,6 +187,72 @@ class PipelineSpec extends SparkSpec {
     assert(engine.queryCached("alpha beta", "u1", topK = 3).isEmpty)
   }
 
+  test("result cache keys keep tenants apart when a user id holds the separator") {
+    val (engine, _) = freshEngine()
+    engine.ingest(Seq(
+      msg("m1", "s1", "u1", "r1", 1, "user", "x alpha"),
+      msg("m2", "s2", "u2|u1", "r2", 1, "user", "x beta")).toDF())
+    def own(user: String) = engine.m1.filter(col("user_id") === user)
+      .select("chunk_id").as[String].collect().toSet
+    // joined as text|user|topK both requests read "x|u2|u1|5"
+    assert(engine.queryCached("x|u2", "u1", topK = 5).map(_.getAs[String]("id")).toSet
+      .subsetOf(own("u1")))
+    val ids = engine.queryCached("x", "u2|u1", topK = 5).map(_.getAs[String]("id")).toSet
+    assert(ids.nonEmpty && ids.subsetOf(own("u2|u1")), ids.mkString(","))
+  }
+
+  // the gate parks a query inside rerank, i.e. inside MemFuse.query on
+  // the caller's thread, so a cache miss is provably in flight
+  private def gatedEngine(gate: GateReranker): MemFuse =
+    new MemFuse(spark, graft.TempDirs.create("memfuse").toString, reranker = gate)
+
+  /** Runs `body` on another thread while `gate` holds its query, then
+    * opens the gate. The wait is a deadlock guard, not a latency bound:
+    * a body stuck behind the held query fails the test, then the gate
+    * opens so the suite can go on. */
+  private def whileHeld[T](gate: GateReranker)(body: => T): T = {
+    assert(gate.entered.await(GateGuard.toMillis, TimeUnit.MILLISECONDS),
+      "the gated query never reached rerank")
+    try Await.result(Future(body), GateGuard)
+    finally gate.release.countDown()
+  }
+  private val GateGuard = 10.minutes
+
+  test("result cache: a miss in flight blocks neither hits nor other tenants' misses") {
+    val gate = new GateReranker("held query")
+    val engine = gatedEngine(gate)
+    engine.ingest(Seq(
+      msg("m1", "s1", "u1", "r1", 1, "user", "held query about spark"),
+      msg("m2", "s2", "u2", "r2", 1, "user", "alpha beta gamma"),
+      msg("m3", "s3", "u3", "r3", 1, "user", "delta epsilon zeta")).toDF())
+    val primed = engine.queryCached("alpha beta", "u2", topK = 3)
+    val held = Future(engine.queryCached("held query", "u1", topK = 3))
+    whileHeld(gate) {
+      assert(engine.queryCached("alpha beta", "u2", topK = 3) eq primed, "hit not served")
+      val miss = engine.queryCached("delta epsilon", "u3", topK = 3)
+      assert(miss.nonEmpty)
+      assert(miss.toSeq == engine.query("delta epsilon", "u3", topK = 3).collect().toSeq)
+    }
+    assert(Await.result(held, GateGuard).toSeq ==
+      engine.query("held query", "u1", topK = 3).collect().toSeq)
+  }
+
+  test("result cache: a fill that began before a write is not served after it") {
+    val gate = new GateReranker("alpha beta")
+    val engine = gatedEngine(gate)
+    engine.ingest(Seq(msg("m1", "s1", "u1", "r1", 1, "user", "gamma delta notes")).toDF())
+    val held = Future(engine.queryCached("alpha beta", "u1", topK = 3))
+    whileHeld(gate) {
+      engine.ingest(Seq(msg("m2", "s2", "u1", "r2", 1, "user", "alpha beta alpha beta")).toDF())
+    }
+    Await.result(held, GateGuard) // may hold the pre-write rows
+    val fresh = engine.m1.filter(col("session_id") === "s2")
+      .select("chunk_id").as[String].collect().toSeq
+    assert(fresh.size == 1)
+    val ids = engine.queryCached("alpha beta", "u1", topK = 3).map(_.getAs[String]("id"))
+    assert(ids.contains(fresh.head), s"stale fill served: ${ids.mkString(",")}")
+  }
+
   test("messagesBySession: ordered, limited, capped at 100") {
     val (engine, _) = freshEngine()
     engine.ingest((1 to 30).map(i =>
@@ -358,5 +428,17 @@ class PipelineSpec extends SparkSpec {
       msg("m2", "s2", "u1", "r2", 1, "user", "banana bread recipe")).toDF())
     val top = engine.query("tune spark shuffle", "u1", topK = 1).collect()
     assert(top.nonEmpty && top.head.getAs[String]("content").contains("shuffle"))
+  }
+}
+
+/** Overlap reranker that parks every caller reranking `heldText` until
+  * `release` opens, counting down `entered` first. */
+class GateReranker(heldText: String) extends Reranker {
+  @transient val entered = new java.util.concurrent.CountDownLatch(1)
+  @transient val release = new java.util.concurrent.CountDownLatch(1)
+  def rerank(candidates: org.apache.spark.sql.DataFrame, queryText: String,
+      topK: Int): org.apache.spark.sql.DataFrame = {
+    if (queryText == heldText) { entered.countDown(); release.await() }
+    OverlapReranker().rerank(candidates, queryText, topK)
   }
 }
